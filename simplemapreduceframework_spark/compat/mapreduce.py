@@ -14,8 +14,11 @@ user contract exactly (SURVEY.md section 4 lowering):
 
 Two execution modes:
 
-- ``faithful``: per-partition group + combiner (mapPartitions), then
-  groupByKey, then reducer over the full list — byte-for-byte reference
+- ``faithful``: per-partition group + combiner (mapPartitions) emits
+  one value list per key per map task — the grouped values, or the
+  combiner's ``[value]`` under the key it returns — and combineByKey
+  concatenates those lists across map tasks (spilling on the reduce
+  side), then reducer over the full list — byte-for-byte reference
   semantics for arbitrary (even non-associative) user functions.
 - ``fast``: the shuffle merges combined values pairwise through the
   reducer (reduceByKey — map-side combine + constant-memory merge).
@@ -143,10 +146,11 @@ class MapReduceJob:
 
     # -- dataflow stages ------------------------------------------------
 
-    def _map_and_combine(self, lines: RDD) -> RDD:
+    def _map_and_combine(self, lines: RDD, as_lists: bool = False) -> RDD:
         """Map + per-partition group + combiner: the reference's map
         task (O4 flatMap, O5 dict grouping, O6 combiner) as one
-        mapPartitions pass — no shuffle yet."""
+        mapPartitions pass — no shuffle yet. Emits (k, v) pairs, or
+        with ``as_lists`` one (k, [v, ...]) per key of the map task."""
         mapper = self.mapper
         combiner = self.combiner
 
@@ -155,37 +159,45 @@ class MapReduceJob:
             for line in part:
                 for k, v in mapper(None, line):
                     groups.setdefault(k, []).append(v)
-            if combiner is None:
+            if combiner is not None:
+                for k, vs in groups.items():
+                    ck, cv = combiner(k, vs)
+                    yield (ck, [cv]) if as_lists else (ck, cv)
+            elif as_lists:
+                yield from groups.items()
+            else:
                 for k, vs in groups.items():
                     for v in vs:
                         yield (k, v)
-            else:
-                for k, vs in groups.items():
-                    yield combiner(k, vs)
 
         return lines.mapPartitions(run_partition)
 
     def run_rdd(self, lines: RDD) -> RDD:
         """Execute on an RDD of input lines; returns RDD[(k, v)]."""
-        combined = self._map_and_combine(lines)
         reducer = self.reducer
+        lists = (
+            reducer is not None and self.mode == "faithful" and not self.sort_values
+        )
+        combined = self._map_and_combine(lines, as_lists=lists)
         if reducer is None:
             return combined
         parts = self.num_partitions or lines.getNumPartitions()
         if self.sort_values:
             return self._run_secondary_sort(combined, parts)
-        if self.mode == "faithful":
+        if lists:
             # Exact reference semantics: reducer sees the complete value
             # list per key (one shuffle file per key there; one shuffle
             # partition group here).
-            return combined.groupByKey(parts).map(
-                lambda kv: reducer(kv[0], list(kv[1]))
+            def extend(values: list[Any], more: list[Any]) -> list[Any]:
+                values.extend(more)
+                return values
+
+            return combined.combineByKey(lambda vs: vs, extend, extend, parts).map(
+                lambda kv: reducer(kv[0], kv[1])
             )
         # fast: pairwise merge through the reducer — map-side combine +
         # constant memory per key during the shuffle merge.
-        return combined.reduceByKey(
-            lambda a, b: reducer(None, [a, b])[1], parts
-        ).map(lambda kv: (kv[0], kv[1]))
+        return combined.reduceByKey(lambda a, b: reducer(None, [a, b])[1], parts)
 
     def _run_secondary_sort(self, combined: RDD, parts: int) -> RDD:
         """Secondary sort: the reducer receives its key's values in
@@ -368,7 +380,8 @@ class LocalClient:
         if self.data_type == "pickle":
             records = read_pickled_records(self.spark, self.data_path)
         else:
-            records = self.spark.sparkContext.textFile(self.data_path)
+            sc = self.spark.sparkContext
+            records = sc.textFile(self.data_path, minPartitions=sc.defaultParallelism)
         job = MapReduceJob(
             self.spark, mapper, reducer, combiner, mode=self.mode
         )

@@ -108,6 +108,58 @@ def test_non_associative_reducer_faithful_semantics(spark):
     assert out == {"a": 3, "b": 3, "c": 1}
 
 
+@pytest.mark.parametrize(
+    "rekey, lines, expected",
+    [
+        # a non-associative reducer sees one combined value per map task
+        (str, ["a a b", "a", "a b b b", "a c"], {"a": [1, 1, 1, 2], "b": [1, 3], "c": [1]}),
+        # the combiner's key is the shuffle key, also when one map task's
+        # combiner folds two map keys together ("a" and "A" in the last)
+        (str.upper, ["a b a", "b c", "a A", "c"], {"A": [1, 1, 2], "B": [1, 1], "C": [1, 1]}),
+    ],
+    ids=["one-value-per-map-task", "combiner-rewrites-key"],
+)
+def test_faithful_reducer_gets_combiner_output_per_map_task(spark, rekey, lines, expected):
+    """Faithful mode with a combiner (reference tasktracker.py:209-226,
+    237-255): the reducer receives each map task's combined value under
+    the key the combiner returned."""
+
+    def mapper(key, value):
+        return [(w, 1) for w in value.split()]
+
+    def combiner(key, values):
+        return rekey(key), sum(values)
+
+    def reducer(key, values):
+        return key, sorted(values)
+
+    rdd = spark.sparkContext.parallelize(lines, len(lines))
+    out = dict(MapReduceJob(spark, mapper, reducer, combiner).run_rdd(rdd).collect())
+    assert out == expected
+
+
+def test_local_client_map_stage_uses_every_core(spark, tmp_path):
+    """LocalClient splits its text input into one map task per core."""
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    data = tmp_path / "data.txt"
+    data.write_text("ab cd\n" * 4 * cores)  # size divisible by cores: exact splits
+    functions = tmp_path / "functions.py"
+    functions.write_text(FUNCTIONS_SRC)
+    group = f"compat-splits-{tmp_path.name}"
+    sc.setJobGroup(group, "map-stage task count")
+    try:
+        result = sorted(LocalClient(spark, str(data), str(functions)).execute())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert result == [("ab", 4 * cores), ("cd", 4 * cores)]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    (job_id,) = tracker.getJobIdsForGroup(group)
+    map_stage = min(tracker.getJobInfo(job_id).stageIds)
+    assert tracker.getStageInfo(map_stage).numTasks == cores
+
+
 @settings(max_examples=20, deadline=None)
 @given(
     st.lists(
@@ -378,17 +430,20 @@ def test_local_client_from_outside_repo_cwd(tmp_path):
     pickled by reference would fail to resolve in a worker whose
     sys.path/cwd never saw the user's directory. Runs a whole job in a
     subprocess with cwd=/ (outside the repo AND outside the job dir),
-    the scenario the verify runbook previously checked by hand."""
+    the scenario the verify runbook previously checked by hand. The
+    workers must also import the engine's Python daemon from there."""
     import os
     import subprocess
     import sys
+    from pathlib import Path
 
+    repo_root = str(Path(__file__).resolve().parents[1])
     (tmp_path / "functions.py").write_text(FUNCTIONS_SRC)
     (tmp_path / "data.txt").write_text(DATA)
     script = tmp_path / "run_job.py"
     script.write_text(
         "import sys\n"
-        f"sys.path.insert(0, {str('/root/repo')!r})\n"
+        f"sys.path.insert(0, {repo_root!r})\n"
         "from simplemapreduceframework_spark import get_spark\n"
         "from simplemapreduceframework_spark.compat import LocalClient\n"
         "spark = get_spark('compat-outside-cwd', cpus=2)\n"
